@@ -2060,7 +2060,7 @@ def q_knn_join(spark, sf_dir):
         )
 
     edges = seg.select("edge_id", seg_wkb("x1", "y1", "dx", "dy").alias("geom"))
-    return nearest_edges(pts, edges, k=1, radius=250.0037, geom_strategy="join", progressive=True)
+    return nearest_edges(pts, edges, k=1, radius=250.0037, progressive=True)
 
 
 # radius 250.0037 deliberately avoids the 0.1-coordinate lattice: a clamped

@@ -23,8 +23,8 @@ def fixture_cache_dir() -> str:
     """Fixture parquet cache root, keyed by the fixture GENERATOR code as
     well as the per-table size knobs: after any edit to fixtures.py a stale
     cache would silently benchmark (and feed build_network with) outdated
-    data.  Shared by bench.py and tools/profile_pages2.py.  Returns "" when
-    caching is disabled (SPARK_GRAFT_FIXTURE_CACHE=off)."""
+    data.  Shared by bench.py and tools/profile_{stages,attrs}.py.  Returns
+    "" when caching is disabled (SPARK_GRAFT_FIXTURE_CACHE=off)."""
     fixcache = os.environ.get(
         "SPARK_GRAFT_FIXTURE_CACHE", "/tmp/spark_graft_fixtures"
     )

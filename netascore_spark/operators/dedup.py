@@ -83,13 +83,6 @@ def with_shingles(docs: DataFrame, id_col="doc_id", text_col="text", n=3) -> Dat
     return _spread(docs).select(F.col(id_col), _shingles(text_col, n).alias("shingles"))
 
 
-# ngram_jaccard_pairs verification layout switch: corpora at or below this
-# bounded doc count attach the per-doc ordered hash arrays to surviving
-# candidates via an explicit broadcast (~550 B/doc -> ~110 MB at the cap);
-# larger corpora use the embedded-array postings (no broadcast, linear).
-NGRAM_BROADCAST_MAX_DOCS = 200_000
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -100,9 +93,13 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs with word-``n``-gram Jaccard >= threshold.
 
-    Candidates: docs sharing >=1 (non-stop) shingle; exact Jaccard via
-    |A∩B| / (|A|+|B|-|A∩B|) computed from the shared-shingle counts — no
-    second pass over the texts.
+    Candidates: docs sharing a (non-stop) prefix shingle; exact Jaccard
+    |A∩B| / (|A|+|B|-|A∩B|) over the docs' shingle-hash sets — no second
+    pass over the texts.
+
+    Not fully lazy: building the DataFrame runs ONE Spark job that
+    materializes the persisted per-doc hash-array table (tracked in
+    ``pipeline.cache``), so the attach joins are planned on its real size.
     """
     # Shingle construction is CODEGEN-NATIVE, not the `_shingles` HOF chain
     # (transform(slice + array_join) per shingle is CodegenFallback —
@@ -210,9 +207,8 @@ def ngram_jaccard_pairs(
     # partners that survive the length filter (n_b >= t*n_a, else J < t),
     # the minimal required overlap is ceil(t*n_x), so indexing only each
     # doc's first |S_x| - ceil(t*n_x) + 1 ordered shingles generates every
-    # qualifying pair.  Each prefix posting EMBEDS the doc's full ordered
-    # hash array, so candidate pairs are verified exactly (array_intersect)
-    # inside the SAME stage — no second shuffle, no join back to the docs.
+    # qualifying pair.  Surviving candidates are then verified exactly
+    # (array_intersect of the two full ordered hash arrays, attached below).
     #
     # alpha is computed as ceil(t*n - eps): for t*n exactly integral a
     # float excess (0.6*5 = 3.0000000000000004) would shorten the prefix
@@ -246,121 +242,74 @@ def ngram_jaccard_pairs(
     # per-shingle member list (~group_size x 540 B) on every exploded row
     # — ~21 GB of transient row payload at 50k docs, 80% of the operator's
     # wall, while array_intersect itself was cheap (a pair-count probe
-    # without the verify ran in the same time as the full query).  For
-    # bounded corpora the fix is structural: collect SLIM postings
-    # (id, n, m, p — no arrays) for pair generation, and attach the two
-    # ordered hash arrays per SURVIVING candidate via broadcast joins of
-    # the one-row-per-doc array table (ver 18.3 -> 6.4 s at 50k docs).
-    # Above _BROADCAST_MAX_DOCS the array table may not fit a broadcast
-    # (~550 B/doc); the embedded-array form below remains the unbounded
-    # scale path (linear in corpus size, no broadcast).
-    n_bounded = docs.select(F.col(id_col)).limit(
-        NGRAM_BROADCAST_MAX_DOCS + 1
-    ).count()
-    if n_bounded <= NGRAM_BROADCAST_MAX_DOCS:
-        from netascore_spark.pipeline import cache as _cache
+    # without the verify ran in the same time as the full query).  So pair
+    # generation runs on SLIM postings (id, n, m, p — no arrays), and the
+    # two ordered hash arrays are attached per SURVIVING candidate by
+    # equi-joins of the one-row-per-doc array table on doc id (ver 18.3 ->
+    # 6.4 s at 50k docs).
+    from netascore_spark.pipeline import cache as _cache
 
-        # by_doc feeds the postings AND the two verify joins: persist so
-        # the shingle pipeline (double scan via df_counts) runs once, not
-        # three times.  ~550 B/doc — bounded by the same threshold that
-        # gates the broadcast.
-        by_doc = _cache.track(by_doc.persist())
-        pref = by_doc.select(
-            F.col(id_col), F.col("n_sh"), F.col("__m"),
-            F.posexplode("__P").alias("__p0", "shingle"),
-        )
-        # pin the group-exchange width: slim postings are ~16 MB of shuffle
-        # bytes for ~10M downstream candidate pairs — AQE's byte-based
-        # coalescing ran the whole verify on 2 tasks (105 s) without it.
-        # The explicit same-key repartition IS the groupBy's exchange (no
-        # second shuffle) and is exempt from coalescing.
-        n_part = int(pref.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        pref = pref.repartition(n_part, F.col("shingle"))
-        grouped = pref.groupBy("shingle").agg(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).alias("i"), F.col("n_sh").alias("n"),
-                    F.col("__m").alias("m"), (F.col("__p0") + 1).alias("p"),
-                )
-            ).alias("__mem")
-        )
-        cand = (
-            grouped.select(F.explode("__mem").alias("__a"), F.col("__mem"))
-            .select(F.col("__a"), F.explode("__mem").alias("__b"))
-            .filter(F.col("__a.i") < F.col("__b.i"))
-        )
-        n_a, n_b = F.col("__a.n"), F.col("__b.n")
-        length_ok = F.least(n_a, n_b) >= F.greatest(n_a, n_b) * threshold - 1e-9
-        ubound = F.lit(1) + F.least(
-            F.col("__a.m") - F.col("__a.p"), F.col("__b.m") - F.col("__b.p")
-        )
-        alpha_pair = (n_a + n_b) * (threshold / (1.0 + threshold)) - 1e-9
-        slim = cand.filter(length_ok & (ubound >= alpha_pair)).select(
-            F.col("__a.i").alias("id_a"), F.col("__b.i").alias("id_b"),
-            n_a.alias("n_a"), n_b.alias("n_b"),
-        )
-        # both attaches are map-side (explicit broadcast): the slim pair
-        # stream never shuffles before the final survivor dedup
-        arr_a = F.broadcast(
-            by_doc.select(F.col(id_col).alias("id_a"), F.col("__S").alias("__sa"))
-        )
-        arr_b = F.broadcast(
-            by_doc.select(F.col(id_col).alias("id_b"), F.col("__S").alias("__sb"))
-        )
-        verified = (
-            slim.join(arr_a, "id_a").join(arr_b, "id_b")
-            .select(
-                "id_a", "id_b", "n_a", "n_b",
-                F.size(F.array_intersect("__sa", "__sb")).alias("inter"),
+    # by_doc feeds the postings AND the two verify joins: persist so the
+    # shingle pipeline (double scan via df_counts) runs once, not three
+    # times.  EAGER, and the operator's only eager job: once the cache is
+    # populated its statistics are the real in-memory bytes, so the
+    # planner broadcasts the array table into the attach joins exactly
+    # when it fits spark.sql.autoBroadcastJoinThreshold and shuffles both
+    # sides otherwise — the gate follows array bytes (document length),
+    # not doc count.
+    by_doc = _cache.track(by_doc.persist())
+    by_doc.count()
+    pref = by_doc.select(
+        F.col(id_col), F.col("n_sh"), F.col("__m"),
+        F.posexplode("__P").alias("__p0", "shingle"),
+    )
+    # pin the group-exchange width: slim postings are ~16 MB of shuffle
+    # bytes for ~10M downstream candidate pairs — AQE's byte-based
+    # coalescing ran the whole verify on 2 tasks (105 s) without it.
+    # The explicit same-key repartition IS the groupBy's exchange (no
+    # second shuffle) and is exempt from coalescing.
+    n_part = int(pref.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    pref = pref.repartition(n_part, F.col("shingle"))
+    grouped = pref.groupBy("shingle").agg(
+        F.collect_list(
+            F.struct(
+                F.col(id_col).alias("i"), F.col("n_sh").alias("n"),
+                F.col("__m").alias("m"), (F.col("__p0") + 1).alias("p"),
             )
+        ).alias("__mem")
+    )
+    # both Generates reference the bare materialized attribute (__mem /
+    # __a) — same ExtractGenerator-inlining rule as the __hs explode
+    cand = (
+        grouped.select(F.explode("__mem").alias("__a"), F.col("__mem"))
+        .select(F.col("__a"), F.explode("__mem").alias("__b"))
+        .filter(F.col("__a.i") < F.col("__b.i"))
+    )
+    n_a, n_b = F.col("__a.n"), F.col("__b.n")
+    # length filter: J <= min/max, so min(n) < t*max(n) can never pass
+    length_ok = F.least(n_a, n_b) >= F.greatest(n_a, n_b) * threshold - 1e-9
+    # positional filter: arrays share the global order, so the FIRST
+    # shared token sits at the min position in both; for that occurrence
+    # inter <= 1 + min(remaining_a, remaining_b).  Applied per occurrence:
+    # a true pair's first occurrence always passes (the bound is valid
+    # there), later occurrences may be pruned freely (duplicates anyway).
+    ubound = F.lit(1) + F.least(
+        F.col("__a.m") - F.col("__a.p"), F.col("__b.m") - F.col("__b.p")
+    )
+    alpha_pair = (n_a + n_b) * (threshold / (1.0 + threshold)) - 1e-9
+    slim = cand.filter(length_ok & (ubound >= alpha_pair)).select(
+        F.col("__a.i").alias("id_a"), F.col("__b.i").alias("id_b"),
+        n_a.alias("n_a"), n_b.alias("n_b"),
+    )
+    arr_a = by_doc.select(F.col(id_col).alias("id_a"), F.col("__S").alias("__sa"))
+    arr_b = by_doc.select(F.col(id_col).alias("id_b"), F.col("__S").alias("__sb"))
+    verified = (
+        slim.join(arr_a, "id_a").join(arr_b, "id_b")
+        .select(
+            "id_a", "id_b", "n_a", "n_b",
+            F.size(F.array_intersect("__sa", "__sb")).alias("inter"),
         )
-    else:
-        pref = by_doc.select(
-            F.col(id_col), F.col("n_sh"), F.col("__m"), F.col("__S"),
-            F.posexplode("__P").alias("__p0", "shingle"),
-        )
-        # one exchange: group the prefix postings (each carrying its doc's
-        # ordered hash array) per shingle; the df^2 candidate rows stream
-        # out of the double-Generate one at a time and are length/
-        # positional-filtered and exact-verified WITHIN the stage — only
-        # threshold survivors (a tiny set) reach the final dedup exchange.
-        grouped = pref.groupBy("shingle").agg(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).alias("i"), F.col("n_sh").alias("n"),
-                    F.col("__m").alias("m"), (F.col("__p0") + 1).alias("p"),
-                    F.col("__S").alias("s"),
-                )
-            ).alias("__mem")
-        )
-        # both Generates reference the bare materialized attribute (__mem /
-        # __a) — same ExtractGenerator-inlining rule as the __hs explode
-        cand = (
-            grouped.select(F.explode("__mem").alias("__a"), F.col("__mem"))
-            .select(F.col("__a"), F.explode("__mem").alias("__b"))
-            .filter(F.col("__a.i") < F.col("__b.i"))
-        )
-        n_a, n_b = F.col("__a.n"), F.col("__b.n")
-        # length filter: J <= min/max, so min(n) < t*max(n) can never pass
-        length_ok = F.least(n_a, n_b) >= F.greatest(n_a, n_b) * threshold - 1e-9
-        # positional filter: arrays share the global order, so the FIRST
-        # shared token sits at the min position in both; for that
-        # occurrence inter <= 1 + min(remaining_a, remaining_b).  Applied
-        # per occurrence: a true pair's first occurrence always passes
-        # (the bound is valid there), later occurrences may be pruned
-        # freely (duplicates anyway).
-        ubound = F.lit(1) + F.least(
-            F.col("__a.m") - F.col("__a.p"), F.col("__b.m") - F.col("__b.p")
-        )
-        alpha_pair = (n_a + n_b) * (threshold / (1.0 + threshold)) - 1e-9
-        inter = F.size(F.array_intersect(F.col("__a.s"), F.col("__b.s")))
-        verified = (
-            cand.filter(length_ok & (ubound >= alpha_pair))
-            .select(
-                F.col("__a.i").alias("id_a"), F.col("__b.i").alias("id_b"),
-                n_a.alias("n_a"), n_b.alias("n_b"), inter.alias("inter"),
-            )
-        )
+    )
     # threshold on the UNROUNDED value (matching exact SQL semantics —
     # rounding first would flip boundary pairs at jaccard ~= threshold),
     # round only the reported column.  A pair sharing several prefix

@@ -22,8 +22,6 @@ the rest at runtime.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window
@@ -213,8 +211,6 @@ def _phase1_topk(
     k: int,
     p1: float,
     cell_size: float,
-    salt_threshold,
-    geom_strategy: str,
     segs_base: DataFrame,
     hot: list,
     carry_cols: tuple = (),
@@ -228,8 +224,8 @@ def _phase1_topk(
     the page coords (and any ``carry_cols``) ride through the aggregate
     (min over a per-url constant), so the caller can split resolved/
     unresolved and feed phase 2 WITHOUT any join back to the pages table.
-    Same candidate machinery as the flat search (cover, salting, strategy
-    hints, explicit join width)."""
+    Same candidate machinery as the flat search (cover, salting, shuffle
+    join, explicit join width)."""
     pg = pages_geo.filter(F.col("x").isNotNull()).select(
         "url", F.col("x").alias("px"), F.col("y").alias("py"), "cell",
         *carry_cols,
@@ -244,14 +240,8 @@ def _phase1_topk(
         # carry-through below must reference the PAGE side unambiguously
         pg = pg.withColumnRenamed("cell", "__pcell")
         cell_col = "__pcell"
-    if geom_strategy == "broadcast":
-        segs = F.broadcast(segs)
-    elif geom_strategy == "join":
-        segs = segs.hint("shuffle_hash")
-    else:
-        raise ValueError(f"unknown geom_strategy {geom_strategy!r}")
-    if geom_strategy != "broadcast" and os.environ.get("SPARK_GRAFT_KNN_PIN", "1") != "0":
-        pg = pg.repartition(_knn_join_width(pg), join_key)
+    segs = segs.hint("shuffle_hash")
+    pg = pg.repartition(_knn_join_width(pg), join_key)
     cand = pg.join(segs, join_key, "left")
     scored = cand.withColumn("dist", spatial.point_segment_dist_expr())
     valid = F.col("dist").isNotNull() & (F.col("dist") <= F.lit(p1))
@@ -280,8 +270,9 @@ def _phase1_topk(
             F.when(F.col("m").isNotNull(), F.array("m")).alias("top"),
             "px", "py", "cell", *carry_cols,
         )
-    # 2..8: per-(url, edge) line distance first (an edge's segments must
-    # fold into ONE top-k slot), then the array_sort+slice aggregation
+    # k >= 2: per-(url, edge) line distance first (an edge's segments must
+    # fold into ONE top-k slot), then the array_sort+slice aggregation,
+    # whose collected array is bounded by the p1-candidate count, not by k
     per_edge = scored.groupBy("url", "edge_id").agg(
         F.min(F.when(valid, F.col("dist"))).alias("dist"), *carry
     )
@@ -310,10 +301,6 @@ def _phase1_topk(
         "px", "py", "cell", *carry_cols,
     )
 
-# Edge tables at or below this count may broadcast their exploded segment
-# cover (7 numeric columns per covered cell) to every executor; anything
-# bigger MUST use the distributed cell join.
-BROADCAST_MAX_EDGES = 1_000_000
 
 # "auto" salting: cells holding more pages than this are pre-split across
 # salt buckets.  Absolute (not total-relative) on purpose — a 50k-page cell
@@ -330,7 +317,6 @@ def nearest_edges(
     cell_size: float = grid.DEFAULT_CELL_SIZE,
     salt_threshold: int | str | None = "auto",
     progressive: bool = True,
-    geom_strategy: str = "join",
     carry: tuple = (),
     _segs: DataFrame | None = None,
     _hot: list | None = None,
@@ -347,23 +333,20 @@ def nearest_edges(
     shuffled ~320 MB at 2.4M pages, the single largest shuffle of the
     pages stage).
 
-    ``geom_strategy`` controls how the page side meets the edge segments:
-
-    - ``"join"`` (default, the 100 TB path): distributed cell equi-join —
-      pages shuffle (url, px, py, cell) only; segments are plain numeric
-      rows (never WKB), no driver collect.
-    - ``"broadcast"``: broadcast the exploded segment cover to every
-      executor — the page side never shuffles (use when edges are provably
-      small; ``BROADCAST_MAX_EDGES`` bounds the auto decision).
-    - ``"auto"``: bounded count, broadcast iff <= ``BROADCAST_MAX_EDGES``.
+    Pages meet edge segments in a distributed cell equi-join: pages
+    shuffle (url, px, py, cell) only; segments are plain numeric rows
+    (never WKB), no driver collect.  The page side is always repartitioned
+    to an explicit width (``_knn_join_width``), because AQE cannot size
+    the candidate fan-out inside the join stage.
 
     ``salt_threshold``: ``"auto"`` (default) pre-splits cells holding more
     than ``AUTO_SALT_THRESHOLD`` pages via one histogram pass; an int is an
     explicit threshold; ``None`` disables salting (AQE skew-join only).
 
     ``progressive=True`` (the DEFAULT) is two-phase cell-ring expansion:
-    phase 1 searches a small padded cover (``cell_size/2``); a page is
-    FINAL when its k-th best distance <= that pad (its cell is inside every
+    phase 1 searches a small padded cover, p1 = ``cell_size/2``, and
+    computes every page's top-k in one aggregation (for any k); a page is
+    FINAL when its k-th best distance <= p1 (its cell is inside every
     nearer edge's padded cover, so no closer edge can exist outside).  Only
     unresolved pages rejoin against the full ``radius`` cover.  Pinned
     result-identical to the flat search (tests/test_pages.py); at realistic
@@ -372,7 +355,7 @@ def nearest_edges(
     edges / 600k pages.
     """
     if progressive and radius > cell_size:
-        p1 = cell_size / float(os.environ.get("SPARK_GRAFT_KNN_P1_DIV", "2"))
+        p1 = cell_size / 2
         # hoist the shared work above both phases: ONE segment-explode Arrow
         # pass (the covers differ by radius pad, but the segments don't) and
         # ONE hot-cell histogram (phase 2's unresolved subset can only be
@@ -386,85 +369,49 @@ def nearest_edges(
             hot = spatial.hot_cells(
                 pages_geo.filter(F.col("x").isNotNull()), "cell", thr
             )
-        if geom_strategy == "auto":
-            # resolve once for BOTH phases (one bounded count, not two)
-            n_bounded = edges.select("edge_id").limit(BROADCAST_MAX_EDGES + 1).count()
-            geom_strategy = (
-                "broadcast" if n_bounded <= BROADCAST_MAX_EDGES else "join"
-            )
-        if k <= 8:
-            # FUSED phase 1 (the round-4 profile showed ~19 s of serial
-            # residue spread over the stage chain phase1 -> kth aggregate ->
-            # final_urls persist -> semi-join -> anti-join): a LEFT candidate
-            # join + ONE aggregation computes the per-url top-k, the
-            # resolution verdict AND carries the page coords — the old kth
-            # shuffle, the final_urls materialization and BOTH url-joins
-            # over the full pages table are gone.  Every page keeps a row
-            # (left join), so "no candidate in the p1 cover" and
-            # "kth > p1" both fall out of the same aggregate.
-            agg = cache.track(
-                _phase1_topk(
-                    pages_geo, k, p1, cell_size, salt_threshold,
-                    geom_strategy, segs_base, hot, carry,
-                ).persist()
-            )
-            # EAGER: the resolved branch, the unresolved branch and the
-            # phase-2 cell-prune all scan this cache as three CONCURRENT
-            # subplans of the caller's one action — submitted before the
-            # cache is populated, each recomputed the final top-k
-            # aggregation from the shuffle (three identical 8-task stages
-            # in the round-5 profile).  One count materializes it once.
-            agg.count()
-            # resolution on the ROUNDED kth distance — identical to the
-            # previous phase1-output comparison (its dist column was
-            # rounded).  coalesce: a page with NO phase-1 candidate has a
-            # NULL top (size/element_at propagate NULL) and must land in
-            # the UNRESOLVED branch, not vanish from both filters.
-            kth_dist = F.round(F.element_at(F.col("top"), k)["dist"], 6)
-            is_final = F.coalesce(
-                (F.size("top") >= k) & (kth_dist <= F.lit(p1)), F.lit(False)
-            )
-            resolved = agg.filter(is_final).select(
-                "url", F.posexplode("top").alias("pos", "t"), *carry
-            ).select(
-                "url",
-                F.col("t.edge_id").alias("edge_id"),
-                F.round(F.col("t.dist"), 6).alias("dist"),
-                (F.col("pos") + 1).cast("int").alias("rank"),
-                *carry,
-            )
-            unresolved_pages = agg.filter(~is_final).select(
-                "url", F.col("px").alias("x"), F.col("py").alias("y"), "cell",
-                *carry,
-            )
-            rest = nearest_edges(
-                unresolved_pages, edges, k, radius, cell_size, salt_threshold,
-                progressive=False, geom_strategy=geom_strategy, carry=carry,
-                _segs=segs_base, _hot=hot,
-                _cells=unresolved_pages.select("cell").distinct(),
-            )
-            return resolved.unionByName(rest)
-        # k > 8 (window-ranked top-k): the original three-step resolve
-        phase1 = cache.track(
-            nearest_edges(
-                pages_geo, edges, k, p1, cell_size, salt_threshold,
-                progressive=False, geom_strategy=geom_strategy, carry=carry,
-                _segs=segs_base, _hot=hot,
+        # FUSED phase 1: a LEFT candidate join + ONE aggregation computes
+        # the per-url top-k, the resolution verdict AND carries the page
+        # coords, so no kth shuffle, no final-url table and no url-join
+        # over the full pages table (that stage chain left ~19 s of serial
+        # residue in the round-4 profile).  Every page keeps a row (left
+        # join), so "no candidate in the p1 cover" and "kth > p1" both fall
+        # out of the same aggregate.
+        agg = cache.track(
+            _phase1_topk(
+                pages_geo, k, p1, cell_size, segs_base, hot, carry,
             ).persist()
         )
-        kth = phase1.groupBy("url").agg(
-            F.max("dist").alias("kth"), F.count("*").alias("n")
+        # EAGER: the resolved branch, the unresolved branch and the phase-2
+        # cell-prune all scan this cache as three CONCURRENT subplans of the
+        # caller's one action — submitted before the cache is populated,
+        # each recomputed the final top-k aggregation from the shuffle
+        # (three identical 8-task stages in the round-5 profile).  One count
+        # materializes it once.
+        agg.count()
+        # resolution on the ROUNDED kth distance — identical to the flat
+        # search's output rounding.  coalesce: a page with NO phase-1
+        # candidate has a NULL top (size/element_at propagate NULL) and
+        # must land in the UNRESOLVED branch, not vanish from both filters.
+        kth_dist = F.round(F.element_at(F.col("top"), k)["dist"], 6)
+        is_final = F.coalesce(
+            (F.size("top") >= k) & (kth_dist <= F.lit(p1)), F.lit(False)
         )
-        final_urls = cache.track(
-            kth.filter((F.col("n") >= k) & (F.col("kth") <= p1))
-            .select("url")
-            .persist()
+        resolved = agg.filter(is_final).select(
+            "url", F.posexplode("top").alias("pos", "t"), *carry
+        ).select(
+            "url",
+            F.col("t.edge_id").alias("edge_id"),
+            F.round(F.col("t.dist"), 6).alias("dist"),
+            (F.col("pos") + 1).cast("int").alias("rank"),
+            *carry,
         )
-        resolved = phase1.join(final_urls, "url", "left_semi")
-        unresolved_pages = pages_geo.join(final_urls, "url", "left_anti")
+        unresolved_pages = agg.filter(~is_final).select(
+            "url", F.col("px").alias("x"), F.col("py").alias("y"), "cell",
+            *carry,
+        )
         rest = nearest_edges(
             unresolved_pages, edges, k, radius, cell_size, salt_threshold,
-            progressive=False, geom_strategy=geom_strategy, carry=carry,
+            progressive=False, carry=carry,
             _segs=segs_base, _hot=hot,
             _cells=unresolved_pages.select("cell").distinct(),
         )
@@ -497,10 +444,6 @@ def nearest_edges(
         # raw cells; salt replication happens after).
         segs = segs.join(F.broadcast(_cells), "cell", "left_semi")
 
-    if geom_strategy == "auto":
-        n_bounded = edges.select("edge_id").limit(BROADCAST_MAX_EDGES + 1).count()
-        geom_strategy = "broadcast" if n_bounded <= BROADCAST_MAX_EDGES else "join"
-
     # "auto" (the default): one map-side-combined histogram pass finds cells
     # whose page count exceeds the absolute straggler bound — a cell holding
     # more rows than that dominates its task on any cluster size, so the
@@ -518,19 +461,11 @@ def nearest_edges(
             pg, segs = spatial.salt_cells(pg, segs, hot)
             join_key = "cell_salt"
 
-    if geom_strategy == "broadcast":
-        # small-edge fast path: ship the exploded seg-cover (7 numeric cols)
-        # to every executor — the page side never shuffles at all
-        segs = F.broadcast(segs)
-    elif geom_strategy == "join":
-        # force the shuffle join: Catalyst's size estimate does not survive
-        # the sequence/explode cover (it sized a ~16M-row cover under the
-        # 64 MB broadcast threshold at 400k edges and OOM'd the driver
-        # building the broadcast).  The segs side is only provably small in
-        # the explicit "broadcast" strategy.
-        segs = segs.hint("shuffle_hash")
-    else:
-        raise ValueError(f"unknown geom_strategy {geom_strategy!r}")
+    # force the shuffle join: Catalyst's size estimate does not survive the
+    # sequence/explode cover (it sized a ~16M-row cover under the 64 MB
+    # broadcast threshold at 400k edges and OOM'd the driver building the
+    # broadcast).
+    segs = segs.hint("shuffle_hash")
 
     # each page carries exactly ONE cell and each segment covers a cell at
     # most once, so a (url, segment) pair meets exactly once — no pair-dedup
@@ -542,8 +477,7 @@ def nearest_edges(
     # tasks (measured: 16M candidate rows in ONE partition at 600k pages).
     # An explicit count is exempt from coalescing, so the compute keeps
     # shuffle.partitions-wide parallelism at every input size.
-    if geom_strategy != "broadcast" and os.environ.get("SPARK_GRAFT_KNN_PIN", "1") != "0":
-        pg = pg.repartition(_knn_join_width(pg), join_key)
+    pg = pg.repartition(_knn_join_width(pg), join_key)
     cand = pg.join(segs, join_key)
     scored = cand.withColumn("dist", spatial.point_segment_dist_expr()).filter(
         F.col("dist") <= radius

@@ -120,10 +120,14 @@ def build_session(
     # the later stages here (extract 8.4 s) but pushed the fault-in cost
     # into the first heavy stage, so the growth-retention form is the
     # default.  Applied to executors too for local-cluster / standalone
-    # runs; extra_conf can override either key wholesale.
+    # runs.  A value for either key in extra_conf is kept: the flag goes in
+    # front of it, so the user's options survive and, the JVM taking the
+    # last occurrence of a flag, a user MaxHeapFreeRatio still wins.
+    extra_conf = dict(extra_conf or {})
     for jvm_k in ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions"):
-        b = b.config(jvm_k, "-XX:MaxHeapFreeRatio=100")
-    for k, v in (extra_conf or {}).items():
+        user_opts = extra_conf.pop(jvm_k, "")
+        b = b.config(jvm_k, f"-XX:MaxHeapFreeRatio=100 {user_opts}".strip())
+    for k, v in extra_conf.items():
         b = b.config(k, v)
     return b.getOrCreate()
 

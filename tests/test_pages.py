@@ -175,31 +175,14 @@ def test_carry_column_equals_join(spark, pages_extracted):
     )
 
 
-def test_nearest_edges_join_equals_broadcast(spark, pages_extracted):
-    # the distributed edge_id-join geometry path (100 TB default) must be
-    # result-identical to the small-table broadcast fast path
-    osm = fixtures.osm_lines(spark, scale=1)
-    edges, _ = N.build_network(osm)
-    j = P.nearest_edges(pages_extracted, edges, k=3, radius=500.0, geom_strategy="join")
-    b = P.nearest_edges(
-        pages_extracted, edges, k=3, radius=500.0, geom_strategy="broadcast"
-    )
-    a = {(r["url"], r["rank"]): (r["edge_id"], r["dist"]) for r in j.collect()}
-    c = {(r["url"], r["rank"]): (r["edge_id"], r["dist"]) for r in b.collect()}
-    assert a == c
-    # auto picks broadcast here (tiny edge table) and stays identical
-    au = P.nearest_edges(
-        pages_extracted, edges, k=3, radius=500.0, geom_strategy="auto"
-    )
-    d = {(r["url"], r["rank"]): (r["edge_id"], r["dist"]) for r in au.collect()}
-    assert a == d
-
-
 def test_nearest_edges_progressive_equals_flat(spark, pages_extracted):
     osm = fixtures.osm_lines(spark, scale=1)
     edges, _ = N.build_network(osm)
-    prog = P.nearest_edges(pages_extracted, edges, k=3, radius=500.0, progressive=True)
-    flat = P.nearest_edges(pages_extracted, edges, k=3, radius=500.0, progressive=False)
-    a = {(r["url"], r["rank"]): (r["edge_id"], r["dist"]) for r in prog.collect()}
-    b = {(r["url"], r["rank"]): (r["edge_id"], r["dist"]) for r in flat.collect()}
-    assert a == b
+    # k=9 is above the flat search's k<=8 aggregation, so it checks the
+    # progressive phase-1 top-k against the flat Window ranking
+    for k in (1, 3, 9):
+        prog = P.nearest_edges(pages_extracted, edges, k=k, radius=500.0, progressive=True)
+        flat = P.nearest_edges(pages_extracted, edges, k=k, radius=500.0, progressive=False)
+        a = {(r["url"], r["rank"]): (r["edge_id"], r["dist"]) for r in prog.collect()}
+        b = {(r["url"], r["rank"]): (r["edge_id"], r["dist"]) for r in flat.collect()}
+        assert a == b, f"progressive != flat at k={k}"

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from netascore_spark.operators import dedup, multimodal, similarity, textstats
+from netascore_spark.pipeline import cache
 
 
 @pytest.fixture(scope="module")
@@ -47,21 +48,50 @@ def test_ngram_jaccard(spark, docs):
     assert not any({a, b} & {6} for a, b in got)
 
 
-def test_ngram_jaccard_verify_layouts_agree(spark, docs, monkeypatch):
-    """Round-6 layout split: bounded corpora attach verification arrays
-    via broadcast joins, unbounded ones embed them in the postings.  Both
-    must produce identical pairs — force the embedded path on the tiny
-    corpus by zeroing the broadcast bound and compare."""
-    fast = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
-    }
-    monkeypatch.setattr(dedup, "NGRAM_BROADCAST_MAX_DOCS", 0)
-    embedded = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
-    }
-    assert fast == embedded and (1, 2) in fast
+def test_ngram_jaccard_attach_join_follows_broadcast_threshold(spark, docs, monkeypatch):
+    """One verify layout: the hash arrays are attached by plain equi-joins,
+    so the join strategy follows the materialized array table's bytes.
+    The tiny corpus broadcasts under the session threshold and shuffles
+    with broadcasting off — with identical pairs.  Building the DataFrame
+    runs no job before the array table's one materializing count."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "ngram-attach-probe"
+    jobs_before_count = []
+    real_count = type(docs).count
+
+    def count(df):
+        jobs_before_count.append((len(tracker.getJobIdsForGroup(group)), df.is_cached))
+        return real_count(df)
+
+    monkeypatch.setattr(type(docs), "count", count)
+    sc.setJobGroup(group, "ngram attach probe")
+    try:
+        built = dedup.ngram_jaccard_pairs(docs, threshold=0.5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        monkeypatch.undo()
+    assert jobs_before_count == [(0, True)]
+    assert tracker.getJobIdsForGroup(group)
+
+    def run(df):
+        pairs = {(r["id_a"], r["id_b"]): r["jaccard"] for r in df.collect()}
+        return pairs, df._jdf.queryExecution().executedPlan().toString()
+
+    fast, plan_fast = run(built)
+    # the second build must plan its own array table, not reuse this one
+    cache.release_all()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        shuffled, plan_shuffled = run(dedup.ngram_jaccard_pairs(docs, threshold=0.5))
+    finally:
+        spark.conf.set(key, old)
+    assert fast == shuffled and (1, 2) in fast
+    assert "BroadcastHashJoin [id_a" in plan_fast, plan_fast
+    assert "BroadcastHashJoin [id_b" in plan_fast, plan_fast
+    assert "BroadcastHashJoin" not in plan_shuffled, plan_shuffled
 
 
 def test_connected_components_chain_and_island(spark):
