@@ -187,8 +187,7 @@ def main() -> None:
     )
 
     def build_net():
-        # matched scale exercises the two-phase scalable id path explicitly
-        e, n = N.build_network(osm, scalable_ids=True if osm_scale >= 10 else None)
+        e, n = N.build_network(osm)
         # localCheckpoint truncates lineage: downstream plan analysis stays
         # O(attribute plan), not O(whole network build plan)
         return e.localCheckpoint(), n.localCheckpoint()

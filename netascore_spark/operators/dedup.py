@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from netascore_spark.operators import spatial
+
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -268,8 +270,7 @@ def ngram_jaccard_pairs(
     # coalescing ran the whole verify on 2 tasks (105 s) without it.
     # The explicit same-key repartition IS the groupBy's exchange (no
     # second shuffle) and is exempt from coalescing.
-    n_part = int(pref.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    pref = pref.repartition(n_part, F.col("shingle"))
+    pref = spatial.spread(pref, "shingle")
     grouped = pref.groupBy("shingle").agg(
         F.collect_list(
             F.struct(

@@ -2,34 +2,32 @@
 
 The reference assigns identity with ``row_number() OVER (ORDER BY ...)``
 (osm_network.sql.j2:133,268,312,342).  A naive Spark ``Window.orderBy``
-without partitioning funnels everything through ONE task — fatal at 100 TB.
+without partitioning funnels everything through ONE task, so
+``assign_ids`` is the package's only id path, at every input size.
 
-``assign_ids`` is the scale path, and it is ONE LAZY PLAN (no collect, no
-persist, no Python): range-repartition by the order key, sort within
-partitions, read (partition id, local index) off
+It is one lazy plan over one persisted range partition (no collect, no
+Python): range-repartition by the order key and persist that exchange,
+sort within partitions, read (partition id, local index) off
 ``monotonically_increasing_id`` (pid in the upper bits, the within-
 partition row index in the lower 33 — deterministic once partitioning and
-intra-partition order are pinned, which the explicit range exchange + sort
-do), aggregate per-partition counts on a SECOND branch of the same
-exchange (AQE reuses the shuffle), turn them into cumulative offsets with
-a tiny single-partition window (one row per partition), and broadcast-join
-the offsets back: ``id = offset[pid] + local``.
+intra-partition order are pinned, which the persisted range exchange +
+sort do), aggregate per-partition counts on a second branch over the SAME
+persisted partition, turn them into cumulative offsets with a tiny
+single-partition window (one row per partition), and broadcast-join the
+offsets back: ``id = offset[pid] + local``.  The persist is what makes
+both branches read one set of range boundaries (see the comment in
+``assign_ids``); it is registered with ``pipeline.cache``.
 
 Identical to a global row_number as long as the order key is a total order
 (ties across partition boundaries would otherwise make ids depend on range
 sampling); callers must pass a tie-free key, matching the SURVEY W3 note
 that edge identity needs a defined total order (osm_id, seg_seq).
 
-Why this and not the previous persist + count-collect + mapInPandas
-three-action design: every action is a driver barrier, and the network
-build calls this twice (edges, nodes) — the sequential job chain was the
-single largest serial residue in the N->4N scaling profile (~10 s at 8
-cores over ~14 small stages).  Lazy composition lets the caller pay ONE
-materialization for the whole finalize stage.
-
-Raw ``monotonically_increasing_id`` alone would be partitioning-dependent
-and non-reproducible; here it is only a (pid, local_index) reader over an
-explicitly pinned partitioning + order.
+No driver barrier: the network build calls this twice (edges, nodes), and
+a lazy composition lets the caller pay one materialization for the whole
+finalize stage.  Raw ``monotonically_increasing_id`` alone would be
+partitioning-dependent and non-reproducible; here it is only a
+(pid, local_index) reader over an explicitly pinned partitioning + order.
 """
 
 from __future__ import annotations
@@ -106,17 +104,3 @@ def assign_ids(
         ).cast("long").alias(id_col),
     )
 
-
-def row_number_small(df: DataFrame, order_cols: list[str], id_col: str = "id") -> DataFrame:
-    """Single-window variant for provably small inputs (fixtures, tests).
-
-    The global window collapses to ONE partition; repartition the result so
-    downstream joins/UDFs don't inherit single-task parallelism (streamed
-    join sides keep their partitioning — a 1-partition edge table serializes
-    every downstream spatial join).
-    """
-    from pyspark.sql import Window
-
-    w = Window.orderBy(*[F.col(c) for c in order_cols])
-    out = df.withColumn(id_col, F.row_number().over(w).cast("long"))
-    return out.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))

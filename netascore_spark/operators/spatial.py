@@ -260,8 +260,7 @@ def candidate_pairs(
         # below is the join's own left input (no extra shuffle), and an
         # explicit repartition is exempt from AQE's byte-based coalescing
         # — same rationale as spread()
-        n_part = int(lc.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        lc = lc.repartition(n_part, F.col("cell"))
+        lc = spread(lc, "cell")
     pairs = lc.join(rc, "cell").drop("cell")
     # NATIVE bbox prefilter (measured: 88% of cell-coincident building-
     # overlay candidates are bbox-disjoint): every refine downstream of
@@ -287,8 +286,7 @@ def candidate_pairs(
         # refine CPU downstream, and without the pin the consumer needed a
         # SECOND full exchange (spread) just to restore parallelism after
         # the coalesced dedup — the refine now runs in the dedup stage
-        n_part = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        pairs = pairs.repartition(n_part, F.col(left_id), F.col(r_id))
+        pairs = spread(pairs, left_id, r_id)
         pairs = pairs.dropDuplicates([left_id, r_id])
     renames = {}
     if r_id != right_id:
@@ -366,20 +364,21 @@ def dwithin_points_native(
     )
 
 
-def spread(df: DataFrame, *cols: str) -> DataFrame:
+def spread(df: DataFrame, *cols: str | Column) -> DataFrame:
     """Explicit repartition to ``spark.sql.shuffle.partitions`` ahead of a
-    Python-heavy (pandas UDF / applyInPandas) stage.
+    Python-heavy (pandas UDF / applyInPandas) stage, or of any join,
+    distinct or window whose input is slim in bytes but heavy in rows —
+    the package's one width pin.
 
     AQE's size-based coalescing uses BYTES as the cost proxy; a candidate
     set that is 30 MB of slim rows but minutes of geometry CPU collapses to
     1-2 tasks under it.  An explicit repartition node is exempt from AQE
     coalescing, so the python work keeps full parallelism (and round-robin
-    rebalances skew).  With key columns the repartition doubles as the
-    groupBy exchange (no extra shuffle for applyInPandas-by-key)."""
+    rebalances skew).  With key columns (names or expressions) the
+    repartition doubles as the groupBy/join/window exchange (no extra
+    shuffle)."""
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if cols:
-        return df.repartition(n, *[F.col(c) for c in cols])
-    return df.repartition(n)
+    return df.repartition(n, *cols)
 
 
 # ---------------------------------------------------------------------------
@@ -541,21 +540,6 @@ def buffer_udf(radius: float, cap: str = "flat", quad_segs: int = 8):
         return pd.Series(out)
 
     return _buf
-
-
-def geom_length_udf():
-    """ST_Length over WKB linestrings."""
-
-    @F.pandas_udf(T.DoubleType())
-    def _len(geoms: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None if g is None else float(ops.length(wkb.decode(bytes(g))[1]))
-                for g in geoms
-            ]
-        )
-
-    return _len
 
 
 def geom_area_udf():

@@ -50,7 +50,6 @@ def run_pipeline(
     include_rail: bool = False,
     include_aerialway: bool = False,
     cell_size: float = 200.0,
-    scalable_ids: bool = False,
     skip: list[str] | None = None,
 ) -> dict[str, DataFrame]:
     """The full netascore flow: network -> attributes -> index -> export.
@@ -79,7 +78,7 @@ def run_pipeline(
         nodes = ckpt.read("network_node")
     else:
         edges, nodes = NET.build_network(
-            osm_line, include_rail, include_aerialway, cell_size, scalable_ids
+            osm_line, include_rail, include_aerialway, cell_size
         )
         edges = snap(edges, "network_edge", ["osm_line"])
         nodes = snap(nodes, "network_node", ["osm_line"])

@@ -169,12 +169,11 @@ def intersections(lp: DataFrame, cell_size: float) -> DataFrame:
     # carries two WKB geoms into CPU-heavy filters — byte-based coalescing
     # runs all of it in 1-2 tasks (measured: 64 s single-task at 400k edges).
     # Same disease/pin as the kNN fan-out join in pipeline/pages.py.
-    n_part = int(lp.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # materialize the cover ONCE before the self-join: its two exchange
     # sides (and the split join's re-read of init) otherwise race to fill
     # the cache inside one job and each recompute the python cover UDF
     lc.count()
-    lc_rep = lc.repartition(n_part, F.col("cell"))
+    lc_rep = spatial.spread(lc, "cell")
     a = lc_rep.select(
         F.col("cell"), *[F.col(c).alias(f"{c}_1") for c in attrs], F.col("geom").alias("geom_1")
     )
@@ -200,7 +199,7 @@ def intersections(lp: DataFrame, cell_size: float) -> DataFrame:
     # explicit width for the dedup's final aggregate as well: the partial
     # agg's output is still a few hundred thousand wide rows (two WKBs
     # each), and the sub-advisory shuffle otherwise lands on ONE task
-    pairs = pairs.repartition(n_part, "osm_id_1", "osm_id_2").dropDuplicates(
+    pairs = spatial.spread(pairs, "osm_id_1", "osm_id_2").dropDuplicates(
         ["osm_id_1", "osm_id_2"]
     )
     # spread: exact line-x-line intersection is python CPU; byte-based AQE
@@ -228,8 +227,7 @@ def dedup_intersections(inter: DataFrame) -> DataFrame:
     # pin the window exchange width (wide rows, tiny bytes — see
     # intersections(); the explicit repartition satisfies the window's
     # clustered-distribution requirement so no second shuffle is added)
-    n_part = int(inter.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    inter = inter.repartition(n_part, *key)
+    inter = spatial.spread(inter, *key)
     return (
         inter.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -303,24 +301,17 @@ def apply_correction_deletes(inter: DataFrame) -> DataFrame:
 
 def split_targets(inter: DataFrame) -> DataFrame:
     """intersecting_links: per osm_id, the set of split points (A1)."""
-    pts = (
-        inter.select(F.col("osm_id_1").alias("osm_id"), "px", "py")
-        .unionByName(inter.select(F.col("osm_id_2").alias("osm_id"), "px", "py"))
-        # pin the distinct's final-aggregate width (see intersections())
-        .repartition(
-            int(inter.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-            "osm_id", "px", "py",
-        )
-        .distinct()  # UNION dedup semantics (osm_network.sql.j2:215-221)
+    pts = inter.select(F.col("osm_id_1").alias("osm_id"), "px", "py").unionByName(
+        inter.select(F.col("osm_id_2").alias("osm_id"), "px", "py")
     )
+    # pin the distinct's final-aggregate width (see intersections());
+    # UNION dedup semantics (osm_network.sql.j2:215-221)
+    pts = spatial.spread(pts, "osm_id", "px", "py").distinct()
     # repartition by osm_id ahead of the groupBy: collect_list's merge work
     # is O(|points|), not O(|groups|) — the sub-advisory exchange otherwise
     # merges every split point in one task
     return (
-        pts.repartition(
-            int(inter.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-            "osm_id",
-        )
+        spatial.spread(pts, "osm_id")
         .groupBy("osm_id")
         .agg(F.collect_list(F.struct("px", "py")).alias("split_points"))
     )
@@ -384,10 +375,9 @@ def split_edges(net_init: DataFrame, targets: DataFrame) -> DataFrame:
     # probe serialized regardless of core count).  Explicit same-key
     # same-count repartitions co-partition the join (no extra shuffle) and
     # are exempt from coalescing.
-    n_part = int(net_init.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     joined = spatial.spread(
-        net_init.repartition(n_part, "osm_id").join(
-            targets.repartition(n_part, "osm_id"), "osm_id", "left"
+        spatial.spread(net_init, "osm_id").join(
+            spatial.spread(targets, "osm_id"), "osm_id", "left"
         )
     )
     split = joined.withColumn(
@@ -407,7 +397,7 @@ def split_edges(net_init: DataFrame, targets: DataFrame) -> DataFrame:
     # UNION (dedup) semantics of osm_network.sql.j2:241; width pinned (the
     # post-split rows are sub-advisory in bytes but number |edges| — the
     # coalesced single-task final agg measured 25 s at 400k edges)
-    return out.repartition(n_part, "osm_id", "seg_seq", "geom").dropDuplicates(
+    return spatial.spread(out, "osm_id", "seg_seq", "geom").dropDuplicates(
         ["osm_id", "seg_seq", "geom"]
     )
 
@@ -541,42 +531,16 @@ def drop_dangling_indoor(corrected: DataFrame, cell_size: float = 200.0) -> Data
 # stage 6: ids, nodes, edges (osm_network.sql.j2:308-364) — W3/W4, J3
 # ---------------------------------------------------------------------------
 
-# Above this row count the single-partition window of row_number_small is a
-# real bottleneck; below it, assign_ids' extra jobs (range sampling + per-
-# partition counts) cost more than they save.  Ids are IDENTICAL either way
-# (pinned by tests/test_network.py): both are the global rank of a total
-# order key.
-SCALABLE_IDS_THRESHOLD = 2_000_000
+def finalize_network(corrected: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """edge_id/node_id assignment + from/to node joins + length.
 
-
-def finalize_network(
-    corrected: DataFrame, scalable_ids: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """edge_id/node_id assignment + from/to node joins + length."""
-    assign = (
-        (lambda df, oc, ic: ids_op.assign_ids(df, oc, ic))
-        if scalable_ids
-        else (lambda df, oc, ic: ids_op.row_number_small(df, oc, ic))
-    )
-    # endpoints/length come from the split UDF's columns (gx0..gy1, glen):
-    # zero python on the build_network path.  Standalone callers passing a
-    # raw (osm_id, seg_seq, geom) table get the same endpoint-UDF fallback
-    # as drop_dangling_indoor (one Arrow pass) instead of an
-    # AnalysisException.
-    if "gx0" not in corrected.columns:
-        e = spatial.endpoints_udf()(F.col("geom"))
-        corrected = corrected.select(
-            "*", e.alias("__e")
-        ).select(
-            "*",
-            F.col("__e.x0").alias("gx0"), F.col("__e.y0").alias("gy0"),
-            F.col("__e.x1").alias("gx1"), F.col("__e.y1").alias("gy1"),
-        ).drop("__e")
-        if "glen" not in corrected.columns:
-            corrected = corrected.withColumn(
-                "glen", spatial.geom_length_udf()(F.col("geom"))
-            )
-    edges = assign(corrected, ["osm_id", "seg_seq"], "edge_id")
+    ``corrected`` is ``split_edges`` output: endpoints and length come from
+    the split UDF's columns (gx0..gy1, glen), so this stage runs no python.
+    Both id columns are ``assign_ids`` ranks of a total order key —
+    (osm_id, seg_seq) for edges, (x, y) for nodes — equal to the
+    reference's ``row_number() OVER (ORDER BY ...)`` at any input size.
+    """
+    edges = ids_op.assign_ids(corrected, ["osm_id", "seg_seq"], "edge_id")
 
     edges = edges.select(
         "*",
@@ -589,17 +553,12 @@ def finalize_network(
     # joins each scan this
     edges = cache.track(edges.persist())
 
-    nodes = (
-        edges.select(F.col("fx").alias("x"), F.col("fy").alias("y"))
-        .unionByName(edges.select(F.col("tx").alias("x"), F.col("ty").alias("y")))
-        # pin the distinct width: 2x|edges| slim rows, sub-advisory bytes
-        .repartition(
-            int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-            "x", "y",
-        )
-        .distinct()
+    nodes = edges.select(F.col("fx").alias("x"), F.col("fy").alias("y")).unionByName(
+        edges.select(F.col("tx").alias("x"), F.col("ty").alias("y"))
     )
-    nodes = assign(nodes, ["x", "y"], "node_id")
+    # pin the distinct width: 2x|edges| slim rows, sub-advisory bytes
+    nodes = spatial.spread(nodes, "x", "y").distinct()
+    nodes = ids_op.assign_ids(nodes, ["x", "y"], "node_id")
     # EAGER cut, nodes-first: the from/to joins below embed the whole node
     # derivation (endpoint union + distinct + id sampling) inside the edges
     # plan, so a caller that materializes edges and THEN nodes (the normal
@@ -637,8 +596,7 @@ def finalize_network(
     # cores; 1.1 s after).  Re-spread to the session's shuffle width —
     # scale-adaptive (conf), one extra exchange of slim rows, row content
     # unchanged.  Same AQE-byte-proxy rationale as operators.spatial.spread.
-    width = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    edges = edges.repartition(width)
+    edges = spatial.spread(edges)
     return edges, nodes
 
 
@@ -680,14 +638,9 @@ def build_network(
     include_rail: bool = False,
     include_aerialway: bool = False,
     cell_size: float = 200.0,
-    scalable_ids: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Full network stage; returns (network_edge, network_node).
-
-    ``scalable_ids=None`` auto-switches: two-phase range-partitioned ids
-    (the 100 TB path) above ``SCALABLE_IDS_THRESHOLD`` rows, a single
-    window below it (cheaper for fixture-sized inputs; ids identical).
-    """
+    """Full network stage; returns (network_edge, network_node), numbered
+    by ``finalize_network``."""
     # persist init: the cover build, the split join, and (for driver-local
     # fixture inputs) every exchange that re-reads the source would each
     # re-scan/re-serialize it otherwise — measured as 4-5 repeated full
@@ -700,8 +653,5 @@ def build_network(
     # the split is materialized now — the source/init cache is dead weight
     # for the rest of this builder (finalize works off `corrected` only)
     init.unpersist()
-    if scalable_ids is None:
-        # cheap: counts the checkpointed partitions, no recompute
-        scalable_ids = corrected.count() > SCALABLE_IDS_THRESHOLD
     corrected = drop_dangling_indoor(corrected, cell_size)
-    return finalize_network(corrected, scalable_ids)
+    return finalize_network(corrected)

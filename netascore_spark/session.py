@@ -52,9 +52,20 @@ def build_session(
     exec_pythonpath = ":".join(
         p for p in [repo_root, os.environ.get("PYTHONPATH", "")] if p
     )
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
+    raw_width = shuffle_partitions or os.environ.get(
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
     )
+    # reject here, not mid-job: a zero width fails the first shuffle, and
+    # "auto" is no Spark value for this conf
+    try:
+        shuffle_partitions = int(raw_width)
+    except ValueError:
+        shuffle_partitions = 0
+    if shuffle_partitions < 1:
+        raise ValueError(
+            "SPARK_GRAFT_SHUFFLE_PARTITIONS (or shuffle_partitions) must be a "
+            f"positive integer, got {raw_width!r}"
+        )
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -130,10 +141,3 @@ def build_session(
     for k, v in extra_conf.items():
         b = b.config(k, v)
     return b.getOrCreate()
-
-
-def tuned_for_scale(spark: SparkSession) -> SparkSession:
-    """Confs we would set on a 1000-executor cluster (documented defaults)."""
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "128m")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "256m")
-    return spark

@@ -122,36 +122,39 @@ def test_length_column(spark, net):
 
 
 def test_id_paths_identical(spark):
-    # W3/W4: the two-phase scalable assign_ids and the single-window
-    # row_number_small must produce THE SAME ids for the same total order
+    # W3/W4: assign_ids must equal the reference's global
+    # row_number() OVER (ORDER BY ...), computed here with a plain Window
+    from pyspark.sql import Window
+
     from netascore_spark.operators import ids as ids_op
-    from netascore_spark.sources import fixtures
-    from netascore_spark.pipeline import network as NN
 
     osm = fixtures.osm_lines(spark, scale=2)
-    init = NN.network_init(osm)
-    lp = NN.link_points(init)
-    inter = NN.apply_correction_deletes(
-        NN.dedup_intersections(NN.intersections(lp, 200.0))
+    init = N.network_init(osm)
+    lp = N.link_points(init)
+    inter = N.apply_correction_deletes(
+        N.dedup_intersections(N.intersections(lp, 200.0))
     )
-    corrected = NN.split_edges(init, NN.split_targets(inter))
-    small = ids_op.row_number_small(corrected, ["osm_id", "seg_seq"], "edge_id")
-    big = ids_op.assign_ids(corrected, ["osm_id", "seg_seq"], "edge_id")
-    a = {(r["osm_id"], r["seg_seq"]): r["edge_id"]
-         for r in small.select("osm_id", "seg_seq", "edge_id").collect()}
+    corrected = N.split_edges(init, N.split_targets(inter))
+    ref = corrected.select(
+        "osm_id", "seg_seq",
+        F.row_number().over(Window.orderBy("osm_id", "seg_seq")).alias("edge_id"),
+    )
+    got = ids_op.assign_ids(corrected, ["osm_id", "seg_seq"], "edge_id")
+    a = {(r["osm_id"], r["seg_seq"]): r["edge_id"] for r in ref.collect()}
     b = {(r["osm_id"], r["seg_seq"]): r["edge_id"]
-         for r in big.select("osm_id", "seg_seq", "edge_id").collect()}
+         for r in got.select("osm_id", "seg_seq", "edge_id").collect()}
+    assert len(a) == corrected.count()
     assert a == b
 
-    # and the full network is byte-identical under both finalize paths
-    e1, n1 = NN.build_network(osm, scalable_ids=False)
-    e2, n2 = NN.build_network(osm, scalable_ids=True)
-    k1 = {(r["edge_id"]): (r["osm_id"], r["seg_seq"], r["from_node"], r["to_node"])
-          for r in e1.select("edge_id", "osm_id", "seg_seq", "from_node", "to_node").collect()}
-    k2 = {(r["edge_id"]): (r["osm_id"], r["seg_seq"], r["from_node"], r["to_node"])
-          for r in e2.select("edge_id", "osm_id", "seg_seq", "from_node", "to_node").collect()}
-    assert k1 == k2
-    assert n1.count() == n2.count()
+    # and the full network numbers its nodes by the rank of (x, y)
+    _, nodes = N.build_network(osm)
+    ref_n = nodes.select(
+        "x", "y", F.row_number().over(Window.orderBy("x", "y")).alias("node_id")
+    )
+    a = {(r["x"], r["y"]): r["node_id"] for r in ref_n.collect()}
+    b = {(r["x"], r["y"]): r["node_id"] for r in nodes.collect()}
+    assert len(a) == nodes.count()
+    assert a == b
 
 
 def test_dangling_indoor_dense_fixture(spark):

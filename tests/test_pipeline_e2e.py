@@ -28,6 +28,10 @@ def test_run_pipeline_with_checkpoints(spark, tmp_path):
     assert n_edges > 0
     assert out["export_node"].count() > 0
     assert "index_bike_ft" in out["network_edge_index"].columns
+    # the CLI's run_pipeline path numbers edges and nodes with assign_ids
+    for table, id_col in (("network_edge", "edge_id"), ("network_node", "node_id")):
+        df = out[table]
+        assert df.select(id_col).distinct().count() == df.count()
 
     # lineage sidecars written with per-partition rows
     ck = Checkpointer(spark, ckdir)

@@ -94,8 +94,7 @@ def main() -> None:
 
     def _net():
         nonlocal edges, nodes
-        # scalable_ids=True: exercise the two-phase id path (the 100 TB one)
-        e, n = N.build_network(osm, scalable_ids=True)
+        e, n = N.build_network(osm)
         edges, nodes = e.localCheckpoint(), n.localCheckpoint()
         return edges.count()
 

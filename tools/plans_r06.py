@@ -57,7 +57,7 @@ def main() -> None:
     # --- composite stages (tiny fixtures; shape is scale-independent) ------
     if want("network_build") or want("attributes_score") or want("pages_tile_join"):
         osm = fixtures.osm_lines(spark, scale=2)
-        edges, nodes = N.build_network(osm, scalable_ids=True)
+        edges, nodes = N.build_network(osm)
         if want("network_build"):
             plans["network_build"] = cap(edges)
         edges_c, nodes_c = edges.localCheckpoint(), nodes.localCheckpoint()

@@ -49,7 +49,7 @@ def main() -> None:
     else:
         osm = fixtures.osm_lines(spark, scale=osm_scale)
 
-    edges, nodes = N.build_network(osm, scalable_ids=True)
+    edges, nodes = N.build_network(osm)
     edges = edges.localCheckpoint()
     nodes = nodes.localCheckpoint()
     print(f"edges={edges.count()}", flush=True)

@@ -53,7 +53,7 @@ def main() -> None:
     n_corr = timed("split_materialize", lambda: corrected.count())
     print(f"  [corrected rows: {n_corr}]")
     corrected2 = timed("indoor_fixpoint", lambda: N.drop_dangling_indoor(corrected, 200.0))
-    edges, nodes = N.finalize_network(corrected2, scalable_ids=True)
+    edges, nodes = N.finalize_network(corrected2)
     ne = timed("finalize_count", lambda: edges.count())
     print(f"  [edges: {ne}]")
     timed("edges_localckpt", lambda: edges.localCheckpoint().count())

@@ -68,7 +68,7 @@ def main() -> None:
     corrected = cache.track(N.split_edges(init, targets).persist())
     print("  corrected:", timed("split_udf", lambda: corrected.count()))
     corrected2 = timed("indoor_fixpoint", lambda: N.drop_dangling_indoor(corrected, 200.0))
-    edges, nodes = N.finalize_network(corrected2, scalable_ids=True)
+    edges, nodes = N.finalize_network(corrected2)
     print("  edges:", timed("finalize", lambda: edges.count()))
     timed("edges_localckpt", lambda: edges.localCheckpoint().count())
     print(json.dumps({"cpus": cpus, "scale": scale, "timings": t}), flush=True)

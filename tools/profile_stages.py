@@ -77,7 +77,7 @@ def main() -> None:
         from netascore_spark.pipeline import pages as PG
         from netascore_spark.sources import fixtures
 
-        e, _ = N.build_network(osm, scalable_ids=True)
+        e, _ = N.build_network(osm)
         edges = e.localCheckpoint()
         edges.count()
         n_pages = scale if scale > 1000 else 2_400_000
@@ -101,7 +101,7 @@ def main() -> None:
         print(f"pages wall: {wall:.1f}s pip={n_pip} agg={n_agg}", flush=True)
     else:
         t0 = time.time()
-        e, n = N.build_network(osm, scalable_ids=True)
+        e, n = N.build_network(osm)
         e = e.localCheckpoint()
         n = n.localCheckpoint()
         ne = e.count()
