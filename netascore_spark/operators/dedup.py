@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from netascore_spark.operators import spatial
+from netascore_spark.pipeline import cache
 
 
 # ---------------------------------------------------------------------------
@@ -249,7 +250,6 @@ def ngram_jaccard_pairs(
     # two ordered hash arrays are attached per SURVIVING candidate by
     # equi-joins of the one-row-per-doc array table on doc id (ver 18.3 ->
     # 6.4 s at 50k docs).
-    from netascore_spark.pipeline import cache as _cache
 
     # by_doc feeds the postings AND the two verify joins: persist so the
     # shingle pipeline (double scan via df_counts) runs once, not three
@@ -259,7 +259,7 @@ def ngram_jaccard_pairs(
     # when it fits spark.sql.autoBroadcastJoinThreshold and shuffles both
     # sides otherwise — the gate follows array bytes (document length),
     # not doc count.
-    by_doc = _cache.track(by_doc.persist())
+    by_doc = cache.track(by_doc.persist())
     by_doc.count()
     pref = by_doc.select(
         F.col(id_col), F.col("n_sh"), F.col("__m"),
@@ -458,17 +458,6 @@ def decontaminate(
 # connected components / cluster canonicalization
 # ---------------------------------------------------------------------------
 
-def _cut(df: DataFrame) -> DataFrame:
-    # same policy as pipeline.network._lineage_cut: reliable checkpoint when
-    # a checkpoint dir is configured (cluster), localCheckpoint otherwise
-    # (local mode) — keeps the iterative plan O(1) deep instead of growing
-    # two joins per round.
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir():
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint()
-
-
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
@@ -496,7 +485,7 @@ def connected_components(
     """
     e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     edges = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-    edges = _cut(edges)  # static across rounds: scan, don't recompute
+    edges = cache.lineage_cut(edges)  # static across rounds: scan, don't recompute
     labels = (
         edges.select(F.col("u").alias("node")).distinct()
         .withColumn("comp", F.col("node"))
@@ -525,7 +514,7 @@ def connected_components(
             new.join(jump, new["comp"] == jump["jn"], "left")
             .select("node", F.coalesce("jc", F.col("comp")).alias("comp"))
         )
-        new = _cut(new)
+        new = cache.lineage_cut(new)
         s = new.agg(F.sum("comp").alias("s")).collect()[0]["s"]
         labels = new
         if s == prev_sum:

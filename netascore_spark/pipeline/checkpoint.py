@@ -18,23 +18,27 @@ a catalog is configured):
 - :meth:`expire_snapshots` prunes old version dirs (Iceberg
   ``expireSnapshots``).
 
-Each snapshot also records per-partition row counts (skew evidence — the
-north rule's "per-partition lineage + row-count metrics") and wall-clock
-duration.  ``on_existing=skip`` (default) makes re-runs read the current
-snapshot instead of recomputing — resume-from-checkpoint mid-pipeline;
-``delete`` appends a new version (old ones stay time-travelable).
+Each manifest entry also records per-partition row counts (skew evidence —
+the north rule's "per-partition lineage + row-count metrics") and wall-clock
+duration.  The counts are per written file, read from the parquet footers
+of the version dir just written (one file per non-empty write task; an
+empty frame writes one 0-row file), so a commit is the write job and
+nothing else.  ``on_existing=skip`` (default) makes re-runs read the
+current snapshot instead of recomputing — resume-from-checkpoint
+mid-pipeline; ``delete`` appends a new version (old ones stay
+time-travelable).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
-import re
 import shutil
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class Checkpointer:
@@ -46,8 +50,8 @@ class Checkpointer:
         catalog: str | None = "auto",
     ):
         """``catalog``: Iceberg catalog selection is CONFIG-ONLY — "auto"
-        (default) uses the first ``spark.sql.catalog.<name>`` the session
-        has configured (none configured -> the parquet+manifest emulation);
+        (default) uses the first ``spark.sql.catalog.<name>`` whose class is
+        an Iceberg catalog (none -> the parquet+manifest emulation);
         an explicit name pins that catalog; ``None``/"" forces parquet.
         Users with a real Iceberg catalog get Iceberg tables without any
         code change; this sandbox (no Iceberg runtime) exercises the
@@ -65,19 +69,20 @@ class Checkpointer:
         return "iceberg" if self.catalog else "parquet"
 
     def _detect_catalog(self) -> str | None:
-        """First configured ``spark.sql.catalog.<name>`` (sorted), else None
-        — pure config inspection, no Iceberg classes touched."""
+        """First ``spark.sql.catalog.<name>`` (sorted) whose configured class
+        names Iceberg, else None — pure config inspection, no Iceberg
+        classes touched.  Other catalogs (Delta's ``spark_catalog``, JDBC)
+        cannot hold these snapshots."""
         try:
             rows = self.spark.sql("SET").collect()
         except Exception:  # pragma: no cover - defensive
             return None
-        names = set()
+        names = []
         for r in rows:
-            key = r["key"]
-            if key.startswith("spark.sql.catalog."):
-                rest = key[len("spark.sql.catalog."):]
-                names.add(rest.split(".", 1)[0])
-        return sorted(names)[0] if names else None
+            name = r["key"].removeprefix("spark.sql.catalog.")
+            if name != r["key"] and "." not in name and "iceberg" in r["value"].lower():
+                names.append(name)
+        return min(names, default=None)
 
     def _iceberg_table(self, name: str) -> str:
         return f"{self.catalog}.netascore.{name}"
@@ -92,9 +97,6 @@ class Checkpointer:
 
     def _manifest_path(self, name: str) -> str:
         return os.path.join(self.base_dir, "_lineage", f"{name}.versions.json")
-
-    def _meta_path(self, name: str) -> str:
-        return os.path.join(self.base_dir, "_lineage", f"{name}.json")
 
     # -- manifest ----------------------------------------------------------
 
@@ -125,23 +127,14 @@ class Checkpointer:
             except Exception:
                 return False
         m = self._manifest(name)
-        if m is not None:
-            cur = self._version_dir(name, m["current"])
-            return os.path.exists(os.path.join(cur, "_SUCCESS"))
-        # legacy layout (pre-versioning): data directly under <base>/<name>
-        return os.path.exists(os.path.join(self._table_dir(name), "_SUCCESS"))
+        if m is None:
+            return False
+        cur = self._version_dir(name, m["current"])
+        return os.path.exists(os.path.join(cur, "_SUCCESS"))
 
     def _resolve(self, name: str, version: int | None, as_of: float | None) -> str:
         m = self._manifest(name)
         if m is None:
-            legacy = self._table_dir(name)
-            if os.path.exists(os.path.join(legacy, "_SUCCESS")):
-                if version is not None or as_of is not None:
-                    raise RuntimeError(
-                        f"checkpoint '{name}' is a legacy single-version "
-                        "snapshot; no time travel available"
-                    )
-                return legacy
             raise RuntimeError(
                 f"checkpoint '{name}' not found under {self.base_dir}; "
                 "cannot skip a stage whose snapshot was never materialized"
@@ -166,7 +159,6 @@ class Checkpointer:
         df: DataFrame,
         name: str,
         upstream: list[str] | None = None,
-        partition_by: list[str] | None = None,
     ) -> DataFrame:
         """Commit a snapshot for ``name`` and return a reader.
 
@@ -185,7 +177,7 @@ class Checkpointer:
 
         if self.backend == "iceberg":
             try:
-                return self._materialize_iceberg(df, name, partition_by)
+                return self._materialize_iceberg(df, name)
             except Exception as exc:
                 import warnings
 
@@ -195,62 +187,28 @@ class Checkpointer:
                 )
                 self.catalog = None
 
-        m = self._manifest(name)
-        if m is None:
-            m = {"current": 0, "snapshots": []}
-            legacy = self._table_dir(name)
-            if os.path.exists(os.path.join(legacy, "_SUCCESS")):
-                # first versioned commit over a pre-versioning layout: move
-                # the legacy part files into v000 so they never mix with new
-                # snapshots under the table dir (raw recursive reads of
-                # <base>/<name> would otherwise see old+new data)
-                v0 = self._version_dir(name, 0)
-                os.makedirs(v0, exist_ok=True)
-                for entry in os.listdir(legacy):
-                    if not re.fullmatch(r"v\d{3}", entry):
-                        shutil.move(
-                            os.path.join(legacy, entry), os.path.join(v0, entry)
-                        )
-                m["snapshots"].append(
-                    {
-                        "name": name,
-                        "version": 0,
-                        "migrated_legacy": True,
-                        "committed_at_epoch": time.time(),
-                    }
-                )
-                m["current"] = 0
-        version = (
-            max((s["version"] for s in m["snapshots"]), default=0) + 1
-            if m["snapshots"]
-            else 1
-        )
+        m = self._manifest(name) or {"current": 0, "snapshots": []}
+        version = max((s["version"] for s in m["snapshots"]), default=0) + 1
 
         t0 = time.time()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
         path = self._version_dir(name, version)
-        writer.parquet(path)
-        out = self.spark.read.parquet(path)
+        df.write.mode("overwrite").parquet(path)
+        # the schema is the frame's own, so the reader needs no inference job
+        out = self.spark.read.schema(df.schema).parquet(path)
 
         part_counts = [
-            r["cnt"]
-            for r in out.groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("cnt"))
-            .orderBy("pid")
-            .collect()
+            pq.read_metadata(f).num_rows
+            for f in sorted(glob.glob(os.path.join(path, "*.parquet")))
         ]
+        rows = sum(part_counts)
         meta = {
             "name": name,
             "version": version,
-            "rows": int(sum(part_counts)),
+            "rows": rows,
             "partitions": len(part_counts),
             "partition_rows": part_counts,
             "max_partition_skew": (
-                max(part_counts) / (sum(part_counts) / len(part_counts))
-                if part_counts and sum(part_counts) > 0
-                else None
+                max(part_counts) * len(part_counts) / rows if rows else None
             ),
             "schema": out.schema.simpleString(),
             "upstream": upstream or [],
@@ -261,22 +219,14 @@ class Checkpointer:
         m["snapshots"].append(meta)
         m["current"] = version
         self._write_manifest(name, m)
-        # per-name lineage sidecar mirrors the CURRENT snapshot (back-compat)
-        with open(self._meta_path(name), "w") as fh:
-            json.dump(meta, fh, indent=2)
         return out
 
-    def _materialize_iceberg(
-        self, df: DataFrame, name: str, partition_by: list[str] | None
-    ) -> DataFrame:
+    def _materialize_iceberg(self, df: DataFrame, name: str) -> DataFrame:
         """Real Iceberg commit: createOrReplace = a new snapshot; Iceberg's
         own metadata supplies the versioning/time-travel the parquet
         emulation reimplements."""
         tbl = self._iceberg_table(name)
-        writer = df.writeTo(tbl).using("iceberg")
-        if partition_by:
-            writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-        writer.createOrReplace()
+        df.writeTo(tbl).using("iceberg").createOrReplace()
         return self.spark.table(tbl)
 
     def read(
@@ -316,5 +266,8 @@ class Checkpointer:
         return dropped
 
     def lineage(self, name: str) -> dict:
-        with open(self._meta_path(name)) as fh:
-            return json.load(fh)
+        """The manifest entry of the current snapshot."""
+        m = self._manifest(name)
+        if m is None:
+            raise RuntimeError(f"checkpoint '{name}' has no snapshot under {self.base_dir}")
+        return next(s for s in m["snapshots"] if s["version"] == m["current"])

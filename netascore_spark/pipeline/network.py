@@ -567,7 +567,7 @@ def finalize_network(corrected: DataFrame) -> tuple[DataFrame, DataFrame]:
     # deep plan on every downstream job.  Cutting here materializes nodes
     # exactly once (through the edges persist above, which the later edges
     # materialization reuses) and the joins plan over a flat scan.
-    nodes = _lineage_cut(nodes)
+    nodes = cache.lineage_cut(nodes)
 
     from_n = nodes.select(
         F.col("node_id").alias("from_node"), F.col("x").alias("fx"), F.col("y").alias("fy")
@@ -604,35 +604,6 @@ def finalize_network(corrected: DataFrame) -> tuple[DataFrame, DataFrame]:
 # orchestration
 # ---------------------------------------------------------------------------
 
-def _lineage_cut(df: DataFrame) -> DataFrame:
-    """EAGER LINEAGE CUT for the split result, not a persist: everything
-    downstream — the indoor fixpoint's collects, the id range-sampling and
-    partition-count jobs, the node dedup, any caller-side checkpoint —
-    launches sequential jobs over this result, and with a plain persist()
-    each of those ~8 job launches re-ANALYZES the whole deep
-    split/correction tree on the driver first (cache substitution happens
-    after analysis).  That per-job serial planning cost is independent of
-    core count and was the dominant term in the network stage's N->4N
-    scaling deficit (~52 s fixed at scale 56).  The cut replaces the plan
-    with a flat scan, so every downstream job plans in O(columns).
-
-    Durability: when ``spark.sparkContext.setCheckpointDir`` is configured
-    (any cluster deployment should set it), use RELIABLE ``checkpoint()`` —
-    recomputable from the checkpoint files after executor loss.  Without a
-    checkpoint dir fall back to ``localCheckpoint()``: executor-local
-    storage, which is free in local mode but UNRECOVERABLE on a real
-    cluster — losing an executor fails the job (there is no lineage left to
-    recompute from).  Lifecycle: both variants bypass the cache.track /
-    CACHE.release_all bookkeeping used for persist(); their storage is
-    freed when the checkpointed RDD is GC'd on the driver (ContextCleaner),
-    i.e. when the returned DataFrame goes out of scope — long sessions
-    calling build_network repeatedly rely on driver GC, not CACHE."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir():
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint()
-
-
 def build_network(
     osm_line: DataFrame,
     include_rail: bool = False,
@@ -649,7 +620,7 @@ def build_network(
     lp = link_points(init)
     inter = apply_correction_deletes(dedup_intersections(intersections(lp, cell_size)))
     targets = split_targets(inter)
-    corrected = _lineage_cut(split_edges(init, targets))
+    corrected = cache.lineage_cut(split_edges(init, targets))
     # the split is materialized now — the source/init cache is dead weight
     # for the rest of this builder (finalize works off `corrected` only)
     init.unpersist()

@@ -33,7 +33,7 @@ def test_run_pipeline_with_checkpoints(spark, tmp_path):
         df = out[table]
         assert df.select(id_col).distinct().count() == df.count()
 
-    # lineage sidecars written with per-partition rows
+    # manifest entries record per-partition rows
     ck = Checkpointer(spark, ckdir)
     meta = ck.lineage("network_edge")
     assert meta["rows"] == n_edges
@@ -76,24 +76,36 @@ def test_checkpoint_time_travel(spark, tmp_path):
         ck.read("t", version=1)
 
 
-def test_checkpoint_legacy_migration(spark, tmp_path):
-    """on_existing=delete over a pre-versioning layout migrates the legacy
-    part files to v000 before committing v001 — no stale files left loose in
-    the table dir, and the legacy snapshot stays time-travelable."""
-    import os
+def test_checkpoint_runs_no_job_after_write(spark, tmp_path):
+    """A commit is the write job and nothing else: row counts come from the
+    footers just written, and the returned reader needs no schema job."""
+    sc = spark.sparkContext
+    df = spark.range(0, 1000, numPartitions=3).withColumn("k", F.col("id") % 7)
+    try:
+        sc.setJobGroup("ckpt_commit", "materialize")
+        Checkpointer(spark, str(tmp_path / "ck")).materialize(df, "t")
+        sc.setJobGroup("ckpt_plain", "plain write")
+        df.write.parquet(str(tmp_path / "plain"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    commit = tracker.getJobIdsForGroup("ckpt_commit")
+    plain = tracker.getJobIdsForGroup("ckpt_plain")
+    assert plain and len(commit) == len(plain)
 
-    base = str(tmp_path)
-    # legacy layout: parquet directly under <base>/<name>
-    spark.range(3).write.parquet(os.path.join(base, "t"))
-    ck = Checkpointer(spark, base, on_existing="delete")
-    assert ck.read("t").count() == 3  # legacy read still works
-    ck.materialize(spark.range(7), "t")
-    # table dir now contains ONLY version dirs
-    entries = sorted(os.listdir(os.path.join(base, "t")))
-    assert entries == ["v000", "v001"]
-    assert ck.read("t").count() == 7
-    assert ck.read("t", version=0).count() == 3
-    assert [s["version"] for s in ck.snapshots("t")] == [0, 1]
+    meta = Checkpointer(spark, str(tmp_path / "ck")).lineage("t")
+    assert meta["rows"] == 1000 == sum(meta["partition_rows"])
+    assert meta["partitions"] == 3
+
+
+def test_checkpoint_empty_frame(spark, tmp_path):
+    ck = Checkpointer(spark, str(tmp_path))
+    out = ck.materialize(spark.range(10).where("id < 0"), "t")
+    assert out.count() == 0
+    meta = ck.lineage("t")
+    assert meta["rows"] == 0 == sum(meta["partition_rows"])
+    assert meta["max_partition_skew"] is None
+    assert not os.path.exists(os.path.join(str(tmp_path), "_lineage", "t.json"))
 
 
 def test_null_column_audit(spark):
@@ -132,3 +144,16 @@ def test_checkpoint_iceberg_backend_selection_is_config_only(spark, tmp_path):
         assert ck.read("t").count() == 4
     finally:
         spark.conf.unset("spark.sql.catalog.lake")
+
+
+def test_checkpoint_ignores_non_iceberg_catalog(spark, tmp_path):
+    """Auto-detection only picks catalogs whose class is an Iceberg one: a
+    JDBC (or Delta session) catalog cannot hold the snapshots."""
+    spark.conf.set(
+        "spark.sql.catalog.jdbc_tmp",
+        "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog",
+    )
+    try:
+        assert Checkpointer(spark, str(tmp_path)).backend == "parquet"
+    finally:
+        spark.conf.unset("spark.sql.catalog.jdbc_tmp")
